@@ -79,6 +79,11 @@ def main() -> int:
     env.update({
         "PYTHONPATH": ROOT + (os.pathsep + env["PYTHONPATH"] if env.get("PYTHONPATH") else ""),
         "TMPDIR": os.path.join(work, "tmp"),
+        # the JVM's own temporary files (streaming's temporary checkpoints,
+        # perf-data) would otherwise land in /tmp
+        "SPARK_SUBMIT_OPTS": " ".join(filter(None, [
+            f"-Djava.io.tmpdir={os.path.join(work, 'tmp')} -XX:-UsePerfData",
+            env.get("SPARK_SUBMIT_OPTS")])),
         "SPARK_LOCAL_DIRS": os.path.join(work, "local"),
         "SPARK_GRAFT_CPUS": env.get("SPARK_GRAFT_CPUS") or str(min(4, os.cpu_count() or 4)),
         "SPARK_DRIVER_MEM": env.get("SPARK_DRIVER_MEM") or "2g",
