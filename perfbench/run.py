@@ -32,6 +32,7 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 STATE = os.path.join(ROOT, ".perfbench")
 WORKER_TIMEOUT_S = 160
+DRIVER_MEM = "2g"
 
 
 def _group_alive(pgid: int) -> bool:
@@ -86,7 +87,11 @@ def main() -> int:
             env.get("SPARK_SUBMIT_OPTS")])),
         "SPARK_LOCAL_DIRS": os.path.join(work, "local"),
         "SPARK_GRAFT_CPUS": env.get("SPARK_GRAFT_CPUS") or str(min(4, os.cpu_count() or 4)),
-        "SPARK_DRIVER_MEM": env.get("SPARK_DRIVER_MEM") or "2g",
+        # a fixed heap, whatever the caller's environment says: heap sizing,
+        # GC and peak_rss_mb then depend on the code alone. 2g holds the
+        # few-MB inputs many times over; the program's 16g default is more
+        # memory than a small shared host has.
+        "SPARK_DRIVER_MEM": DRIVER_MEM,
         "PYSPARK_PYTHON": sys.executable,
         "PYSPARK_DRIVER_PYTHON": sys.executable,
     })

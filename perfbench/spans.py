@@ -4,8 +4,7 @@ reader that attributes Spark task metrics to them.
 A span is (id, parent, name, start, end). When tracing is on, each span
 also owns a Spark job group named after its id, so the jobs a call
 launches are counted right after it returns (the status store keeps only
-the last 1000 jobs). Jobs started on streaming threads carry no job group;
-they are counted as the growth of the ungrouped job set during the span.
+the last 1000 jobs).
 """
 
 from __future__ import annotations
@@ -28,7 +27,6 @@ class Span:
     end: float = 0.0
     jobs: list[int] = field(default_factory=list)
     tasks: int = 0
-    stream_jobs: int = 0
     attrs: dict = field(default_factory=dict)
 
     @property
@@ -73,10 +71,7 @@ class Tracer:
         self.spans.append(sp)
         self._stack.append(sp)
         sc = self._live_sc() if jobs else None
-        ungrouped = set()
         if sc is not None:
-            st = sc.statusTracker()
-            ungrouped = set(st.getJobIdsForGroup(None))
             sc.setJobGroup(f"pb{sp.id}", name)
         try:
             yield sp
@@ -92,7 +87,6 @@ class Tracer:
                     for s in (info.stageIds if info else []):
                         si = st.getStageInfo(s)
                         sp.tasks += si.numTasks if si else 0
-                sp.stream_jobs = len(set(st.getJobIdsForGroup(None)) - ungrouped)
                 if parent is not None:
                     sc.setJobGroup(f"pb{parent.id}", parent.name)
                 else:
@@ -109,8 +103,7 @@ class Tracer:
         rows = [
             {"id": s.id, "parent": s.parent, "name": s.name, "start": s.start,
              "end": s.end, "self": self_time(s, self.children(s)),
-             "jobs": len(s.jobs), "tasks": s.tasks,
-             "stream_jobs": s.stream_jobs, **s.attrs}
+             "jobs": len(s.jobs), "tasks": s.tasks, **s.attrs}
             for s in self.spans
         ]
         with open(path, "w") as f:
@@ -122,8 +115,7 @@ def read_event_logs(log_dir: str) -> dict:
     every uncompressed Spark event log under ``log_dir``."""
     groups: dict[str, dict] = defaultdict(lambda: {
         "jobs": 0, "stages": set(), "tasks": 0, "task_s": 0.0, "cpu_s": 0.0,
-        "shuffle_read_bytes": 0, "shuffle_write_bytes": 0,
-        "spill_bytes": 0, "failed_tasks": 0, "stage_ivs": [],
+        "shuffle_read_bytes": 0, "shuffle_write_bytes": 0, "stage_ivs": [],
     })
     for app in sorted(glob.glob(os.path.join(log_dir, "*"))):
         # one application per entry: a plain file, or a rolling-log
@@ -159,8 +151,6 @@ def read_event_logs(log_dir: str) -> dict:
                     continue
                 acc = groups[g]
                 acc["tasks"] += 1
-                if (e.get("Task End Reason") or {}).get("Reason") != "Success":
-                    acc["failed_tasks"] += 1
                 m = e.get("Task Metrics") or {}
                 acc["task_s"] += m.get("Executor Run Time", 0) / 1000.0
                 acc["cpu_s"] += m.get("Executor CPU Time", 0) / 1e9
@@ -169,8 +159,6 @@ def read_event_logs(log_dir: str) -> dict:
                                               + sr.get("Local Bytes Read", 0))
                 sw = m.get("Shuffle Write Metrics") or {}
                 acc["shuffle_write_bytes"] += sw.get("Shuffle Bytes Written", 0)
-                acc["spill_bytes"] += (m.get("Memory Bytes Spilled", 0)
-                                       + m.get("Disk Bytes Spilled", 0))
     return dict(groups)
 
 

@@ -10,11 +10,11 @@ previous one returned):
 
 1. inputs: the seeded tables for the workload's scale and for the lake
    probe (generated once per seed, not timed);
-2. set-up, three times: Spark session start (the first one cold),
+2. set-up, once and cold: Spark session start (which launches the JVM),
    registry import, view registration;
-3. passes: the first, cold pass, then five warm-up passes, then measured
-   passes for ``--seconds`` (at least three). Each query runs as
-   build (``spark_fn``) -> analyze (``df.schema``) -> plan
+3. passes: the first, cold pass, then the workload's warm-up passes,
+   then measured passes for ``--seconds`` (at least three). Each query
+   runs as build (``spark_fn``) -> analyze (``df.schema``) -> plan
    (``executedPlan``) -> exec (no-op write) -> ``release_persisted``;
 4. verify (untimed): ``harness.run_pair`` against the DuckDB oracle for
    each pair of the workload;
@@ -30,7 +30,6 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import subprocess
 import sys
 import threading
 import time
@@ -52,16 +51,16 @@ RELATIONAL = ["s01_parquet_scan", "p03_filter_boolean", "j01_inner_equi", "j11_a
               "st01_tumbling_batch", "l01_dedup_exact"]
 ITERATIVE = ["gr10_hits"]
 
-# name -> (scale factor, registry pairs in the order the seed shuffles)
+# name -> (scale factor, registry pairs in the order the seed shuffles,
+# warm-up passes). The JIT keeps compiling through the first warm passes:
+# relational pass times level off after about five passes; iterative ones
+# fall steeply for about eight, then slowly for ten more. A fixed number
+# of warm-up passes puts every run's measured passes at the same point of
+# that curve; more of them would not fit the run's time budget.
 WORKLOADS = {
-    "relational_sf001": (0.01, RELATIONAL),
-    "iterative_sf001": (0.01, ITERATIVE),
+    "relational_sf001": (0.01, RELATIONAL, 5),
+    "iterative_sf001": (0.01, ITERATIVE, 8),
 }
-SETUPS = 3
-# the JIT keeps compiling through the first warm passes (pass times fall
-# for about five passes, then level off): a fixed number of warm-up passes
-# puts every run's measured passes at the same point of that curve
-WARMUP_PASSES = 5
 MIN_MEASURED = 3
 # the lake probe runs on its own fixed-scale inputs, the same on every workload
 PROBE_SF = 0.01
@@ -131,7 +130,7 @@ def cpu_ticks() -> tuple[int, int]:
 class Run:
     def __init__(self, args):
         self.args = args
-        self.sf, self.pairs = WORKLOADS[args.workload]
+        self.sf, self.pairs, self.warmup = WORKLOADS[args.workload]
         self.rng = np.random.default_rng(args.seed)
         self.tracer = spans.Tracer(bool(args.trace))
         self.spark = None
@@ -150,8 +149,9 @@ class Run:
                          "spark.eventLog.compress": "false"})
         return conf
 
-    def setup(self, k: int) -> dict:
-        """One set-up; returns the seconds of each part and their total."""
+    def setup(self) -> dict:
+        """The run's one, cold set-up; returns the seconds of each part and
+        their total."""
         from pydatalake_gen2_spark.registry import ensure_views, load_all
         from pydatalake_gen2_spark.session import get_spark
 
@@ -159,26 +159,13 @@ class Run:
         with tr.span("setup"):
             t0 = time.perf_counter()
             with tr.span("session.start"):
-                if self.spark is not None:
-                    self.spark.stop()
                 self.spark = get_spark("perfbench", extra_conf=self._conf())
             out["session"] = time.perf_counter() - t0
             tr.bind(self.spark.sparkContext)
-            if k == 0:
-                t0 = time.perf_counter()
-                with tr.span("registry.load"):
-                    load_all()
-                out["registry"] = time.perf_counter() - t0
-            else:
-                # the registry is imported once per interpreter: time a
-                # fresh interpreter's import of it
-                with tr.span("registry.load"):
-                    code = ("import time, pyspark.sql; t = time.perf_counter(); "
-                            "from pydatalake_gen2_spark.registry import load_all; "
-                            "load_all(); print(time.perf_counter() - t)")
-                    res = subprocess.run([sys.executable, "-c", code], check=True,
-                                         capture_output=True, text=True)
-                out["registry"] = float(res.stdout.strip().splitlines()[-1])
+            t0 = time.perf_counter()
+            with tr.span("registry.load"):
+                load_all()
+            out["registry"] = time.perf_counter() - t0
             t0 = time.perf_counter()
             with tr.span("tables.register_views"):
                 ensure_views(self.spark, self.sf_dir)
@@ -328,10 +315,10 @@ class Run:
 
         t0 = time.perf_counter()
         with RssSampler() as rss, self.tracer.span("workload"):
-            setups = [self.setup(k) for k in range(SETUPS)]
+            setup = self.setup()
             phases["setup"] = time.perf_counter() - t0
             t_start = time.perf_counter()
-            passes = [self.one_pass(order) for _ in range(1 + WARMUP_PASSES)]
+            passes = [self.one_pass(order) for _ in range(1 + self.warmup)]
             t_window = time.perf_counter()
             measured = []
             while (len(measured) < MIN_MEASURED
@@ -356,7 +343,7 @@ class Run:
                 if r is not None:
                     per_q.setdefault(r["name"], []).append(r["s"])
         m = {
-            "setup_s": stats.median([s["total"] for s in setups]),
+            "setup_s": setup["total"],
             "first_pass_s": passes[0]["s"],
             "pass_s": stats.median([p["s"] for p in measured]),
             "query_geomean_s": stats.geomean([stats.median(v) for v in per_q.values()]),
@@ -365,19 +352,19 @@ class Run:
         info = {
             "workload": args.workload, "seed": args.seed, "sf": self.sf,
             "passes": len(passes), "phases_s": phases,
-            "setup_cold_s": setups[0]["total"], "verify": verify,
+            "verify": verify,
             "pass_s_each": [round(p["s"], 3) for p in passes],
             "query_median_s": {k: round(stats.median(v), 3) for k, v in per_q.items()},
             "host_steal_share": [round(p["steal"], 3) for p in passes],
             "fail_frac": len(self.failures) / self.attempted,
         }
         if args.trace:
-            m.update(self.layer_metrics(setups, measured, probe))
+            m.update(self.layer_metrics(setup, measured, probe))
             m["trace.pass_s"] = m["pass_s"]
             self.tracer.dump(os.path.join(args.out, "spans.json"))
         return {"metrics": m, "info": info}
 
-    def layer_metrics(self, setups, measured, probe) -> dict:
+    def layer_metrics(self, setup, measured, probe) -> dict:
         """Per-layer metrics: medians over measured passes of per-pass sums,
         from the spans and the event log; lake layers from the probe."""
         groups = spans.read_event_logs(self.evlog)
@@ -397,11 +384,11 @@ class Run:
             return lambda s: groups.get(f"pb{s.id}", {}).get(key, 0)
 
         m = {
-            "session.start_s": med([s["session"] for s in setups]),
-            "registry.load_s": med([s["registry"] for s in setups]),
-            "tables.register_views_s": med([s["views"] for s in setups]),
+            "session.start_s": setup["session"],
+            "registry.load_s": setup["registry"],
+            "tables.register_views_s": setup["views"],
             "queries.build_s": total("build", lambda s: s.dur),
-            "queries.build_jobs": total("build", lambda s: len(s.jobs) + s.stream_jobs),
+            "queries.build_jobs": total("build", lambda s: len(s.jobs)),
             "queries.build_tasks": total("build", lambda s: s.tasks),
             "catalyst.analyze_s": total("analyze", lambda s: s.dur),
             "catalyst.plan_s": total("plan", lambda s: s.dur),
@@ -413,7 +400,7 @@ class Run:
         }
         m["exec.gc_s"] = per_pass(lambda p: p["gc_s"])
         for key in ("tasks", "task_s", "cpu_s", "shuffle_read_bytes",
-                    "shuffle_write_bytes", "spill_bytes", "failed_tasks"):
+                    "shuffle_write_bytes"):
             m[f"exec.{key}"] = total("exec", ev(key))
         m["operators.tracked_frames"] = per_pass(
             lambda p: sum(r["tracked"] for r in p["queries"] if r))
