@@ -216,6 +216,24 @@ def _local_topk_indices(qids, ids, cos, k):
     return np.sort(order[rank < k])
 
 
+def _gather_rows(sorted_ids, mat, keys):
+    """Rows of ``mat`` for ``keys`` by binary search over ``sorted_ids``.
+    searchsorted alone returns the insertion point of an absent id, i.e.
+    a neighbour's row (or an index past the end), so membership is
+    checked and a miss raises instead of scoring the wrong vector."""
+    import numpy as np
+
+    idx = np.searchsorted(sorted_ids, keys)
+    hit = idx < len(sorted_ids)
+    hit[hit] = sorted_ids[idx[hit]] == keys[hit]
+    if not hit.all():
+        raise KeyError(
+            f"{int((~hit).sum())} ids absent from the broadcast matrix, "
+            f"e.g. {keys[~hit][:5].tolist()}"
+        )
+    return mat[idx]
+
+
 def _pair_cos_lookup_arrow(bc, dim: int = 64, id_col: str = "vec_id",
                            local_k: int | None = None):
     """mapInArrow scorer over (query_id, id) KEY batches: both vectors are
@@ -237,8 +255,8 @@ def _pair_cos_lookup_arrow(bc, dim: int = 64, id_col: str = "vec_id",
                 continue
             qids = b.column("query_id").to_numpy(zero_copy_only=False)
             ids = b.column(id_col).to_numpy(zero_copy_only=False)
-            qm = mat[np.searchsorted(sorted_ids, qids)].astype(np.float64)
-            cm = mat[np.searchsorted(sorted_ids, ids)].astype(np.float64)
+            qm = _gather_rows(sorted_ids, mat, qids).astype(np.float64)
+            cm = _gather_rows(sorted_ids, mat, ids).astype(np.float64)
             n = qm.shape[0]
             acc_qc = np.zeros(n, dtype=np.float64)
             acc_qq = np.zeros(n, dtype=np.float64)

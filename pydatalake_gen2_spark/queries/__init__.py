@@ -20,8 +20,3 @@ from pydatalake_gen2_spark.queries import (  # noqa: F401
     streaming_batch,
     windows,
 )
-
-# Aliases must register LAST — they re-list already-registered pairs so one
-# representative per operator family sorts into the driver's 50-name
-# alphabetical correctness window (see queries/aliases.py docstring).
-from pydatalake_gen2_spark.queries import aliases  # noqa: F401, E402

@@ -14,12 +14,14 @@ operators; ADLS Gen2 auth collapses to connector conf (sources/lake.py).
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pydatalake_gen2_spark.registry import register, sql_pair
+from pydatalake_gen2_spark.sources.lake import LakeCatalog
 from pydatalake_gen2_spark.tables import TABLES, load_table
 
 _tmp_root = tempfile.mkdtemp(prefix="pydatalake_sinks_")
@@ -1433,9 +1435,10 @@ def s38_incremental_agg_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         "TABLE ... SHALLOW CLONE): the clone commit is ONE manifest "
         "upload whose dir list references the source snapshot "
         "ABSOLUTELY; no data moves (certified: data_dirs_copied counts "
-        "_v* dirs under the clone root — 0 at clone time, 1 only after "
-        "the clone's own append). The clone reads identically to the "
-        "source (row count + key sum hash-matched), diverges via its "
+        "the clone-owned data dirs in each version's manifest — 0 at "
+        "clone time, 1 only after the clone's own append). The clone "
+        "reads identically to the source (row count + key sum "
+        "hash-matched), diverges via its "
         "own append_commit without touching the source, and the source "
         "stays byte-identical after the divergence (third probe). This "
         "is the dev/test-against-prod-data and experiment-branching "
@@ -1454,20 +1457,20 @@ def s39_shallow_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     if clone.current_version() == 0:
         clone.clone_from(src_vt)
 
-    def dirs_copied() -> int:
-        import os as _os
-
-        root = _tmp("s39_clone", sf_dir)
+    def dirs_copied(version: int) -> int:
+        # data dirs a clone version owns (root-relative in its manifest);
+        # pinned per version, so a repeat run that finds v2 already
+        # committed still reads 0 for v1
         return sum(
-            1 for n in _os.listdir(root) if n.startswith("_v")
-        ) if _os.path.isdir(root) else 0
+            1 for d in clone._manifest_dirs(version) if not clone._is_external(d)
+        )
 
     clone_v1 = clone.read(1)
-    copied_v1 = dirs_copied()
+    copied_v1 = dirs_copied(1)
     if clone.current_version() == 1:
         clone.append_commit(o.filter(F.col("o_orderkey") % 4 == 1))
     clone_v2 = clone.read(2)
-    copied_v2 = dirs_copied()
+    copied_v2 = dirs_copied(2)
     src_after = src_vt.read()
 
     def stat(df, label, copied):
@@ -1986,3 +1989,67 @@ def s47_cdf_row_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumnRenamed("_change_type", "change_type")
         .orderBy("o_orderkey", "change_type")
     )
+
+
+# ---------------------------------------------------------------------------
+# a00: LakeCatalog round-trip (the reference's path-level REST surface)
+# ---------------------------------------------------------------------------
+# A deterministic smoke of the reference's literal §2A surface (create →
+# set/get properties → list → rename → read → stat → delete on a local
+# filesystem root), so the reference's REST-client semantics
+# (client.py:213-627) get an oracle row too. Its result table is fully
+# deterministic, so it carries a VALUES oracle and hashes like any H pair.
+
+_PAYLOAD = b"hello lake"
+
+
+@register(
+    "a00_lake_roundtrip",
+    duck_sql="""
+    SELECT CAST(step AS INT) AS step, op, ok
+    FROM (VALUES
+        (0, 'create_filesystem', TRUE),
+        (1, 'set_get_properties', TRUE),
+        (2, 'list_paths', TRUE),
+        (3, 'rename_path', TRUE),
+        (4, 'read_bytes', TRUE),
+        (5, 'stat_length', TRUE),
+        (6, 'delete_path', TRUE),
+        (7, 'delete_filesystem', TRUE),
+        (8, 'list_filesystems_empty', TRUE)
+    ) t(step, op, ok)
+    ORDER BY step
+    """,
+)
+def a00_lake_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """§2A reference-surface round-trip (client.py:213-627 equivalents) on a
+    throwaway local-fs root; each step's postcondition becomes one
+    deterministic (step, op, ok) row."""
+    tmp = tempfile.mkdtemp(prefix="lake_rt_")
+    try:
+        cat = LakeCatalog(spark, f"file://{tmp}")
+        checks: list[tuple[str, bool]] = []
+        checks.append(("create_filesystem", cat.create_filesystem("fs1")))
+        cat.create_path("fs1/dir1", "directory")
+        cat.upload_bytes("fs1/dir1/a.bin", _PAYLOAD)
+        cat.set_properties("fs1/dir1/a.bin", {"owner": "spark", "tier": "hot"})
+        checks.append(
+            (
+                "set_get_properties",
+                cat.get_user_properties("fs1/dir1/a.bin")
+                == {"owner": "spark", "tier": "hot"},
+            )
+        )
+        checks.append(
+            ("list_paths", [p.name for p in cat.list_paths("fs1/dir1")] == ["a.bin"])
+        )
+        checks.append(("rename_path", cat.rename_path("fs1/dir1/a.bin", "fs1/dir1/b.bin")))
+        checks.append(("read_bytes", cat.read_bytes("fs1/dir1/b.bin") == _PAYLOAD))
+        checks.append(("stat_length", cat.get_properties("fs1/dir1/b.bin").length == len(_PAYLOAD)))
+        checks.append(("delete_path", cat.delete_path("fs1/dir1", recursive=True)))
+        checks.append(("delete_filesystem", cat.delete_filesystem("fs1")))
+        checks.append(("list_filesystems_empty", cat.list_filesystems() == []))
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    rows = [(i, op, bool(ok)) for i, (op, ok) in enumerate(checks)]
+    return spark.createDataFrame(rows, "step INT, op STRING, ok BOOLEAN").orderBy("step")

@@ -1,4 +1,10 @@
-"""Static dtype-class parity gate: Spark analyzed schema vs DuckDB bind.
+"""The registry's one jobless check: dtype-class parity and shape contract.
+
+``audit_all`` builds every registered QueryPair once, reads its analyzed
+schema and plan without running a job, and applies two families of rules:
+the dtype-class parity gate below and the canonicalizer shape contract
+(``_shape_problems``). ``tools/check.py --analyze`` and the tier-1 registry
+test both call it.
 
 Round-10 driver finding: the dq08 oracle left a SimHash fingerprint as
 DuckDB HUGEINT (``sum(BIGINT)`` widens), so the output column reached the
@@ -29,6 +35,7 @@ even when the VALUES are equal — exactly the dq08 failure.
 
 from __future__ import annotations
 
+import re
 from typing import Any
 
 from pyspark.sql import types as T
@@ -120,30 +127,125 @@ def duck_type_class(t: Any) -> str:
 
 
 # ---------------------------------------------------------------------------
+# Shape contract (output types and casts the external canonicalizer hashes)
+# ---------------------------------------------------------------------------
+
+def _walk_wide_casts(jplan) -> set:
+    """Collect (child_type, 'double') for every Cast(decimal(p>=19, s=0)
+    -> double) in an analyzed plan, recursing through plan nodes,
+    expression trees, and subquery plans via py4j."""
+    hits = set()
+    stack = [jplan]
+    while stack:
+        node = stack.pop()
+        try:
+            ch = node.children()
+            for i in range(ch.size()):
+                stack.append(ch.apply(i))
+        except Exception:
+            pass
+        try:
+            exprs = node.expressions()
+        except Exception:
+            continue
+        estack = [exprs.apply(i) for i in range(exprs.size())]
+        while estack:
+            e = estack.pop()
+            cls = e.getClass().getSimpleName()
+            if cls == "Cast":
+                try:
+                    dt = e.dataType().simpleString()
+                    cdt = e.child().dataType().simpleString()
+                    m = re.match(r"decimal\((\d+),(\d+)\)", cdt)
+                    if dt == "double" and m and int(m.group(1)) >= 19 \
+                            and int(m.group(2)) == 0:
+                        hits.add((cdt, dt))
+                except Exception:
+                    pass
+            if "Subquery" in cls or "Exists" in cls or "ListQuery" in cls:
+                try:
+                    stack.append(e.plan())
+                except Exception:
+                    pass
+            try:
+                ech = e.children()
+                for i in range(ech.size()):
+                    estack.append(ech.apply(i))
+            except Exception:
+                pass
+    return hits
+
+
+# Rule prefixes of ``_shape_problems``; ``audit_pair`` adds ``dtype`` and
+# ``audit_all`` adds ``error``.
+SHAPE_RULES = ("complex_output", "wide_int_decimal_output", "wide_cast")
+
+
+def _shape_problems(schema: T.StructType, jplan) -> list[str]:
+    """The canonicalizer shape contract for one oracle pair:
+
+    (1) ``complex_output`` — no complex-typed output columns: the external
+        canonicalizer pandas-sorts and hashes result cells, and dies on
+        list/dict cells (round-1 VERDICT: f30/f31/f32 TypeError
+        unhashable list). Arrays are rendered via array_join /
+        array_to_string in the pair.
+
+    (2) ``wide_int_decimal_output`` — no wide integer-decimal OUTPUT
+        columns (DecimalType precision > 15, scale 0): their values can
+        pass 2^53, where a float64-coercing hasher renders Spark's Decimal
+        and DuckDB's int128 differently even when the values are EQUAL —
+        the round-5 red hash row (g51's DECIMAL(38,0) cents^2 sums,
+        ~2^61). Render such values as STRING, or keep them < 2^53 via
+        sqlexact.idiv.
+
+    (3) ``wide_cast`` — no Cast(decimal(p>=19, s=0) -> double) ANYWHERE in
+        the analyzed plan: width >= 19 is DuckDB's int128 storage, whose
+        cast to double is NOT correctly rounded (1-ulp drift, observed
+        live on g39's 70-bit moments) — a shared-text cast can therefore
+        differ per engine even on equal inputs, and a terminal ROUND(6)
+        only shrinks the window where the ulp flips a rounding boundary.
+        Use sqlexact.dec2dbl (deterministic hi/lo int64 split) or exact
+        integer division instead. Width <= 18 scale-0 casts are int64-
+        backed in both engines (correctly rounded — deterministic), and
+        scaled money casts (e.g. DECIMAL(28,4) revenue) keep their
+        unscaled payloads < 2^53 at test scale; both stay allowed.
+    """
+    problems = []
+    for f in schema.fields:
+        dt = f.dataType
+        if isinstance(dt, (T.ArrayType, T.MapType, T.StructType)):
+            problems.append(f"complex_output: {f.name} {dt.simpleString()}")
+        if isinstance(dt, T.DecimalType) and dt.precision > 15 and dt.scale == 0:
+            problems.append(f"wide_int_decimal_output: {f.name} {dt.simpleString()}")
+    for cdt, dt in sorted(_walk_wide_casts(jplan)):
+        problems.append(f"wide_cast: {cdt} -> {dt}")
+    return problems
+
+
+# ---------------------------------------------------------------------------
 # Pair / registry audit
 # ---------------------------------------------------------------------------
 
-def audit_pair(spark, con, sf_dir: str, name: str, sdf=None) -> list[str]:
-    """Return per-column class mismatches for one pair ([] = parity).
+def audit_pair(spark, con, sf_dir: str, name: str) -> list[str]:
+    """Every rule one pair breaks, each problem prefixed with its rule.
 
-    Constructs the Spark DataFrame (analyzer only — no job) and binds the
-    oracle SQL as a lazy DuckDB relation (no execution).  Columns are
-    matched by lower-cased name, order-insensitive, mirroring the
-    driver's sort-columns-by-name compare.  Pass ``sdf`` when the
-    caller already built the pair's DataFrame (tools/check.py
-    --analyze) — only its schema is read, and side-effectful pairs
-    (stream drains, versioned-table writes) then construct once, not
-    twice.
+    Constructs the Spark DataFrame and reads its schema and analyzed plan
+    once (analyzer only — no job), binds the oracle SQL as a lazy DuckDB
+    relation (no execution), then applies the dtype-class parity check
+    (columns matched by lower-cased name, order-insensitive, mirroring the
+    hash gate's sort-columns-by-name compare) and the shape contract
+    (``_shape_problems``). A rows-only pair (no oracle SQL) is only
+    constructed and analyzed: it is never hashed.
     """
     from pydatalake_gen2_spark.registry import REGISTRY
 
     qp = REGISTRY[name]
+    sdf = qp.spark_fn(spark, sf_dir)
+    schema = sdf.schema  # forces full analysis; never runs a job
     if qp.duck_sql is None:
         return []
-    if sdf is None:
-        sdf = qp.spark_fn(spark, sf_dir)
-    s_types = {f.name.lower(): spark_type_class(f.dataType) for f in sdf.schema.fields}
     rel = con.sql(qp.duck_sql)
+    s_types = {f.name.lower(): spark_type_class(f.dataType) for f in schema.fields}
     d_types = {
         c.lower(): duck_type_class(t) for c, t in zip(rel.columns, rel.types)
     }
@@ -151,27 +253,36 @@ def audit_pair(spark, con, sf_dir: str, name: str, sdf=None) -> list[str]:
     for col in sorted(set(s_types) | set(d_types)):
         sc, dc = s_types.get(col), d_types.get(col)
         if sc is None or dc is None:
-            problems.append(f"{col}: present only in "
+            problems.append(f"dtype: {col} present only in "
                             f"{'spark' if dc is None else 'duck'}")
         elif sc != dc:
-            problems.append(f"{col}: spark={sc} duck={dc}")
-    return problems
+            problems.append(f"dtype: {col} spark={sc} duck={dc}")
+    return problems + _shape_problems(
+        schema, sdf._jdf.queryExecution().analyzed()
+    )
 
 
 def audit_all(spark, sf_dir: str, names: list[str] | None = None) -> dict[str, list[str]]:
-    """Audit every (or the selected) registered pair; returns {name: problems}
-    for pairs with at least one mismatch or an audit-time error."""
+    """The registry's one jobless check: audit every (or the selected)
+    registered pair, building each exactly once and releasing its
+    persisted frames right after (only the schema and plan are read, so
+    nothing consumes them; harness.run_pair releases the same way).
+    Returns {name: problems} for pairs that break a rule or fail
+    to construct (rule ``error``)."""
     from pydatalake_gen2_spark.harness import duck_connect
+    from pydatalake_gen2_spark.operators.util import release_persisted
     from pydatalake_gen2_spark.registry import REGISTRY, load_all
 
     load_all()
     con = duck_connect(sf_dir)
     out: dict[str, list[str]] = {}
-    for name in names or sorted(REGISTRY):
+    for name in sorted(REGISTRY) if names is None else names:
         try:
             problems = audit_pair(spark, con, sf_dir, name)
         except Exception as e:  # noqa: BLE001 — surface every failure class
-            problems = [f"AUDIT_ERROR {type(e).__name__}: {str(e)[:300]}"]
+            problems = [f"error: {type(e).__name__}: {str(e)[:300]}"]
+        finally:
+            release_persisted()
         if problems:
             out[name] = problems
     return out

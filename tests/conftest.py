@@ -36,3 +36,13 @@ def duck(sf_dir):
     from pydatalake_gen2_spark.harness import duck_connect
 
     return duck_connect(sf_dir)
+
+
+@pytest.fixture(scope="session")
+def registry_audit(spark, sf_dir):
+    """One jobless construction pass over the whole registry
+    (``typeaudit.audit_all``, the same call as ``tools/check.py
+    --analyze``); the registry-wide gates read their rules from it."""
+    from pydatalake_gen2_spark.typeaudit import audit_all
+
+    return audit_all(spark, sf_dir)

@@ -21,104 +21,27 @@ def test_pair(spark, duck, sf_dir, name):
     assert res["spark_rows"] >= 0
 
 
-def _walk_wide_casts(jplan) -> set:
-    """Collect (child_type, 'double') for every Cast(decimal(p>=19, s=0)
-    -> double) in an analyzed plan, recursing through plan nodes,
-    expression trees, and subquery plans via py4j."""
-    import re
+def test_canonicalizer_shape_contract(registry_audit):
+    """Driver-gate shape contract over EVERY oracle pair, read from the
+    session's one jobless construction pass (``typeaudit.audit_all``):
+    no complex-typed output columns, no wide integer-decimal output
+    columns, and no Cast(decimal(p>=19, s=0) -> double) anywhere in the
+    analyzed plan (rules and reasons in ``typeaudit._shape_problems``)."""
+    from pydatalake_gen2_spark.typeaudit import SHAPE_RULES
 
-    hits = set()
-    stack = [jplan]
-    while stack:
-        node = stack.pop()
-        try:
-            ch = node.children()
-            for i in range(ch.size()):
-                stack.append(ch.apply(i))
-        except Exception:
-            pass
-        try:
-            exprs = node.expressions()
-        except Exception:
-            continue
-        estack = [exprs.apply(i) for i in range(exprs.size())]
-        while estack:
-            e = estack.pop()
-            cls = e.getClass().getSimpleName()
-            if cls == "Cast":
-                try:
-                    dt = e.dataType().simpleString()
-                    cdt = e.child().dataType().simpleString()
-                    m = re.match(r"decimal\((\d+),(\d+)\)", cdt)
-                    if dt == "double" and m and int(m.group(1)) >= 19 \
-                            and int(m.group(2)) == 0:
-                        hits.add((cdt, dt))
-                except Exception:
-                    pass
-            if "Subquery" in cls or "Exists" in cls or "ListQuery" in cls:
-                try:
-                    stack.append(e.plan())
-                except Exception:
-                    pass
-            try:
-                ech = e.children()
-                for i in range(ech.size()):
-                    estack.append(ech.apply(i))
-            except Exception:
-                pass
-    return hits
+    bad = {n: ps for n, ps in registry_audit.items()
+           if any(p.split(":")[0] in SHAPE_RULES for p in ps)}
+    assert bad == {}, f"shape-contract breaks in {len(bad)} pairs: {bad}"
 
 
-def test_canonicalizer_shape_contract(spark, sf_dir):
-    """Driver-gate shape contract, checked over EVERY oracle pair in one
-    construction pass (no execution):
-
-    (1) No complex-typed output columns: the external canonicalizer
-        pandas-sorts and hashes result cells, and dies on list/dict
-        cells (round-1 VERDICT: f30/f31/f32 TypeError unhashable list).
-        Arrays are rendered via array_join/array_to_string in the pair.
-
-    (2) No wide integer-decimal OUTPUT columns (DecimalType precision >
-        15, scale 0): their values can pass 2^53, where a float64-
-        coercing hasher renders Spark's Decimal and DuckDB's int128
-        differently even when the values are EQUAL — the round-5 driver
-        red row (g51's DECIMAL(38,0) cents^2 sums, ~2^61). Render such
-        values as STRING, or keep them < 2^53 via sqlexact.idiv.
-
-    (3) No Cast(decimal(p>=19, s=0) -> double) ANYWHERE in the analyzed
-        plan: width >= 19 is DuckDB's int128 storage, whose cast to
-        double is NOT correctly rounded (1-ulp drift, observed live on
-        g39's 70-bit moments) — a shared-text cast can therefore differ
-        per engine even on equal inputs, and a terminal ROUND(6) only
-        shrinks the window where the ulp flips a rounding boundary.
-        Use sqlexact.dec2dbl (deterministic hi/lo int64 split) or exact
-        integer division instead. Width <= 18 scale-0 casts are int64-
-        backed in both engines (correctly rounded — deterministic), and
-        scaled money casts (e.g. DECIMAL(28,4) revenue) keep their
-        unscaled payloads < 2^53 at test scale; both stay allowed.
-    """
-    from pyspark.sql.types import ArrayType, DecimalType, MapType, StructType
-
-    complex_out, wide_out, wide_casts = [], [], []
-    for name, qp in sorted(load_all().items()):
-        if qp.duck_sql is None:
-            continue  # rows-only checks never hash cells
-        df = qp.spark_fn(spark, sf_dir)
-        for f in df.schema.fields:
-            if isinstance(f.dataType, (ArrayType, MapType, StructType)):
-                complex_out.append((name, f.name, f.dataType.simpleString()))
-            if (
-                isinstance(f.dataType, DecimalType)
-                and f.dataType.precision > 15
-                and f.dataType.scale == 0
-            ):
-                wide_out.append((name, f.name, f.dataType.simpleString()))
-        hits = _walk_wide_casts(df._jdf.queryExecution().analyzed())
-        if hits:
-            wide_casts.append((name, sorted(hits)))
-    assert not complex_out, f"complex-typed outputs: {complex_out}"
-    assert not wide_out, f"wide integer-decimal outputs: {wide_out}"
-    assert not wide_casts, f"wide-decimal->double casts: {wide_casts}"
+def test_s39_shallow_clone_repeatable(spark, duck, sf_dir):
+    """s39 keeps its clone under a per-process temp root, so a second run
+    finds the first run's append already committed. Its data_dirs_copied
+    probes must still read the pinned versions, not the directory
+    listing, and match on every run."""
+    for _ in range(2):
+        res = run_pair(spark, duck, sf_dir, "s39_shallow_clone")
+        assert res["status"] == "match", res
 
 
 def test_float64_exact_fence_unit():
@@ -154,6 +77,8 @@ def test_wide_cast_walker_sentinel(spark):
     every accessor in try/except, so Catalyst API drift would make it
     fail OPEN (report zero casts). Assert it still detects a deliberate
     decimal(38,0)->double cast — API drift now fails THIS test loudly."""
+    from pydatalake_gen2_spark.typeaudit import _walk_wide_casts
+
     df = spark.range(1).select(
         F.col("id").cast("decimal(38,0)").cast("double").alias("x")
     )

@@ -62,11 +62,13 @@ def test_fk_closure_survives_key_shifts(scaled_dir):
             f"(SELECT 1 FROM {parent} p WHERE p.{pk} = c.{ck})"
         ).fetchone()[0]
         assert orphans == 0, (child, ck, orphans)
-    # keys are globally unique after shifting (no replica collisions)
-    dup = con.execute(
-        "SELECT count(*) - count(DISTINCT o_orderkey) FROM orders"
-    ).fetchone()[0]
-    assert dup == 0
+    # keys are globally unique after shifting (no replica collisions);
+    # l36/l59/l60 rely on documents.doc_id being unique
+    for table, key in (("orders", "o_orderkey"), ("documents", "doc_id")):
+        dup = con.execute(
+            f"SELECT count(*) - count(DISTINCT {key}) FROM {table}"
+        ).fetchone()[0]
+        assert dup == 0, (table, key, dup)
 
 
 def test_replica_documents_are_not_near_duplicates(scaled_dir):

@@ -1470,3 +1470,34 @@ def test_crm_single_scan_generator_matches_legacy_union(spark, sf_dir):
     assert legacy.exceptAll(new).count() == 0
     plan = new._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Scan parquet") == 1
+
+
+def test_pair_cos_lookup_rejects_absent_ids():
+    """The broadcast-matrix scorer must raise on an id the matrix does
+    not hold instead of scoring a neighbouring row's vector, both for an
+    id that falls between stored ids and for one past the end."""
+    import types
+
+    import numpy as np
+    import pyarrow as pa
+    import pytest
+
+    from pydatalake_gen2_spark.operators.similarity import _pair_cos_lookup_arrow
+
+    sorted_ids = np.array([10, 20, 30], dtype=np.int64)
+    mat = np.array([[1, 0], [0, 1], [1, 1]], dtype=np.float32)
+    score = _pair_cos_lookup_arrow(
+        types.SimpleNamespace(value=(sorted_ids, mat)), dim=2
+    )
+
+    def batch(qids, ids):
+        return pa.RecordBatch.from_arrays(
+            [pa.array(qids, pa.int64()), pa.array(ids, pa.int64())],
+            names=["query_id", "vec_id"],
+        )
+
+    (out,) = score([batch([10, 10], [20, 30])])
+    assert out.column("cos").to_pylist() == pytest.approx([0.0, 2 ** -0.5])
+    for qids, ids in (([10], [25]), ([10], [40]), ([5], [10])):
+        with pytest.raises(KeyError, match="absent"):
+            list(score([batch(qids, ids)]))

@@ -104,7 +104,7 @@ def test_planted_hugeint_oracle_rejected(spark, duck, sf_dir):
     reg.REGISTRY[name] = qp
     try:
         problems = audit_pair(spark, duck, sf_dir, name)
-        assert problems == ["val: spark=int duck=decimal(s=0)"]
+        assert problems == ["dtype: val spark=int duck=decimal(s=0)"]
     finally:
         del reg.REGISTRY[name]
 
@@ -130,14 +130,53 @@ def test_cast_hugeint_oracle_accepted(spark, duck, sf_dir):
         del reg.REGISTRY[name]
 
 
+def test_planted_array_output_rejected(spark, sf_dir, monkeypatch):
+    """A pair whose output column is an array (the canonicalizer cannot
+    hash list cells) fails both the registry audit and
+    ``tools/check.py --analyze``, which is a thin caller of it."""
+    import importlib.util
+    import os
+
+    from pydatalake_gen2_spark import registry as reg
+    from pydatalake_gen2_spark.registry import QueryPair
+    from pydatalake_gen2_spark.typeaudit import audit_all
+
+    name = "zz_test_planted_array"
+
+    def spark_fn(s, d):
+        reg.ensure_views(s, d)
+        return s.sql("SELECT array(r_regionkey) AS arr FROM region")
+
+    reg.REGISTRY[name] = QueryPair(
+        name, spark_fn, "SELECT [r_regionkey] AS arr FROM region"
+    )
+    try:
+        bad = audit_all(spark, sf_dir, [name])
+        assert list(bad) == [name]
+        assert [p.split(":")[0] for p in bad[name]] == ["complex_output"]
+        path = os.path.join(
+            os.path.dirname(os.path.dirname(__file__)), "tools", "check.py"
+        )
+        spec = importlib.util.spec_from_file_location("check_tool", path)
+        check = importlib.util.module_from_spec(spec)
+        spec.loader.exec_module(check)
+        monkeypatch.setattr(check, "get_spark", lambda *a, **k: spark)
+        assert check.analyze_only(sf_dir, [name]) == 1
+    finally:
+        del reg.REGISTRY[name]
+
+
 # ---------------------------------------------------------------------------
-# The registry-wide gate: every H pair binds with class parity.  (Full-run
-# twin of tools/check.py --analyze; marked slow-ish but still minutes.)
+# The registry-wide gates: one construction pass over every pair (the
+# session's ``registry_audit``, the same call as tools/check.py --analyze)
+# applies the dtype-class parity check here and the canonicalizer shape
+# contract in tests/test_correctness.py.
 # ---------------------------------------------------------------------------
 
 @pytest.mark.slow
-def test_registry_dtype_parity(spark, sf_dir):
-    from pydatalake_gen2_spark.typeaudit import audit_all
+def test_registry_dtype_parity(registry_audit):
+    from pydatalake_gen2_spark.typeaudit import SHAPE_RULES
 
-    bad = audit_all(spark, sf_dir)
+    bad = {n: ps for n, ps in registry_audit.items()
+           if any(p.split(":")[0] not in SHAPE_RULES for p in ps)}
     assert bad == {}, f"dtype-class drift in {len(bad)} pairs: {bad}"

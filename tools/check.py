@@ -8,16 +8,19 @@ Usage:
 DataFrame and forces Spark's analyzer over it (``df.schema``) without
 executing a job, so an operator that fails at analysis time (illegal
 expression, unresolved column, bad plan shape) can never ship unrun —
-the dq07 class of bug. Seconds for most of the registry; pairs that
-materialize fixtures inside their builder still pay that one-time cost.
+the dq07 class of bug. It runs the same registry audit as tier-1
+(``typeaudit.audit_all``: dtype-class parity and the shape contract).
+Seconds for most of the registry; pairs that materialize fixtures inside
+their builder still pay that one-time cost.
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pydatalake_gen2_spark.harness import run_all
 from pydatalake_gen2_spark.registry import load_all
@@ -33,35 +36,18 @@ def _selected(prefixes: list[str]) -> list[str]:
 
 
 def analyze_only(sf_dir: str, prefixes: list[str]) -> int:
-    """Construct + analyze every selected pair; no job execution.
-
-    Also runs the round-11 dtype-class parity gate (typeaudit): Spark's
-    analyzed schema vs DuckDB's static bind of the oracle — jobless on
-    both sides — so an integral-vs-decimal/float/string class drift (the
-    dq08 driver-red class) can never ship unflagged.
-    """
-    from pydatalake_gen2_spark.harness import duck_connect
-    from pydatalake_gen2_spark.registry import REGISTRY
-    from pydatalake_gen2_spark.typeaudit import audit_pair
+    """Construct + analyze every selected pair without running a job and
+    apply the registry audit (``typeaudit.audit_all``): dtype-class parity
+    against DuckDB's static bind of the oracle and the canonicalizer shape
+    contract."""
+    from pydatalake_gen2_spark.typeaudit import audit_all
 
     names = _selected(prefixes)
-    spark = get_spark("analyze")
-    con = duck_connect(sf_dir)
-    bad = 0
     t0 = time.time()
-    for name in names:
-        pair = REGISTRY[name]
-        try:
-            df = pair.spark_fn(spark, sf_dir)
-            _ = df.schema  # forces full analysis; never runs a job
-            problems = audit_pair(spark, con, sf_dir, name, sdf=df)
-            if problems:
-                bad += 1
-                print(f"FAIL {name:38s} TYPE_MISMATCH: {problems}")
-        except Exception as e:  # noqa: BLE001 — report every failure class
-            bad += 1
-            print(f"FAIL {name:38s} {type(e).__name__}: {str(e)[:300]}")
-    print(f"\nanalyze+types: {len(names) - bad}/{len(names)} pass "
+    bad = audit_all(get_spark("analyze"), sf_dir, names)
+    for name, problems in bad.items():
+        print(f"FAIL {name:38s} {problems}")
+    print(f"\nanalyze+audit: {len(names) - len(bad)}/{len(names)} pass "
           f"({time.time() - t0:.1f}s)")
     return 1 if bad else 0
 
